@@ -5,9 +5,10 @@ One round = one declarative DataFrame DAG::
     frontier scan → latest-attempt → anti-join resolved (seen ∪ dead)
       → robots + budget gate (broadcast hosts)
       → salt-local + per-host priority top-k          (selection)
-      → (host, salt) repartition → fetch/parse UDF    (the only Python)
+      → (host, salt) repartition → fetch/parse UDF    (Python, one task per core)
       → link extraction (native) → first-wins anti-join vs frontier
       → state appends: resolved, documents, frontier
+        + bloom delta build                           (Python, applyInPandas)
       → lineage row                                    (commit marker)
 
 State tables (all append-only snapshot tables):
@@ -81,7 +82,8 @@ class CrawlEngine:
                  archive_dir: str | None = None,
                  archive_compress: bool = False):
         self.spark = spark
-        self.hosts = hosts
+        self._hosts_src = hosts
+        self._hosts_local: DataFrame | None = None
         self.fetcher = fetcher
         self.seed = seed
         self.max_attempts = max_attempts
@@ -123,6 +125,28 @@ class CrawlEngine:
         self._seen_xor = 0
         self._seen_n = 0
         self.last_timings: dict[str, float] = {}
+
+    @property
+    def hosts(self) -> DataFrame:
+        """The hosts table (robots + politeness budgets) every round's
+        selection joins, read from the caller's DataFrame once — on
+        first use, so the constructor, :meth:`init` and :meth:`resume`
+        submit no job for it — and kept as a driver-local relation.
+
+        Callers build hosts with ``createDataFrame(list)``: a Python RDD
+        that each round's broadcast join would otherwise re-run as
+        ``defaultParallelism`` Python tasks, each paying the Python
+        worker's fixed start-up cost (see crawl/fetch.py). The local
+        relation plans as ``LocalTableScan``, whose broadcast runs no
+        Python. The broadcast join already collects hosts to the
+        driver every round, so this holds no more there than before.
+        Later changes to the source table are not seen: a new engine
+        (``resume()``) picks them up.
+        """
+        if self._hosts_local is None:
+            src = self._hosts_src
+            self._hosts_local = self.spark.createDataFrame(src.toArrow(), src.schema)
+        return self._hosts_local
 
     # -- views over resolved ----------------------------------------------
     def url_seen_df(self) -> DataFrame:

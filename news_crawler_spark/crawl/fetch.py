@@ -1,5 +1,5 @@
-"""Batch fetch + parse as vectorized Arrow UDFs (the only Python on
-the data plane, per SURVEY.md §2.13).
+"""Batch fetch + parse as a vectorized Arrow UDF: one of the round's
+two Python stages (the other is the bloom delta build in crawl/bloom.py).
 
 The reference fetches serially with requests/cloudscraper and parses
 with BeautifulSoup (``news.py:85-124``, ``asec.py:56-61``); here a
@@ -8,6 +8,16 @@ repartitioned by ``(host, salt)`` so (a) one hot host spreads over k
 partitions (skew), (b) politeness delay can be enforced per
 partition-host group (each of the k salt slices sleeps
 ``crawl_delay * k``, preserving the per-host aggregate rate).
+
+Every Python task has a fixed cost before any row is fetched: the
+worker's set-up (``pyspark.worker_util.setup_spark_files``) calls
+``importlib.invalidate_caches()``, and on Python 3.11 each zipimporter
+over ``pyspark.zip`` then re-reads the zip's directory. Measured on a
+4-vCPU Xeon VM (Spark 4.1.2, Python 3.11): an identity ``mapInPandas``
+over 4,000 rows takes ~0.27 s in 4 tasks and ~3.6 s in 64 at
+``local[4]``, i.e. ~0.2 s of a core per task, while rendering and
+parsing the 1,776 synthetic pages of a perfbench crawl_backlog round
+takes ~0.42 s of CPU in all. So the stage runs one task per core.
 
 Fetchers are pluggable. :class:`SyntheticFetcher` computes pages as a
 pure function of the URL (fixtures.sitegen) — deterministic, no I/O,
@@ -118,11 +128,14 @@ def fetch_round(selected: DataFrame, fetcher: Fetcher, n_salts: int = 8,
     # byte-bound, so AQE's size-based partition coalescing must NOT fold
     # it onto a couple of workers (measured: coalesced to 2 tasks and
     # serialized the whole fetch). An explicit numPartitions is exempt
-    # from AQE coalescing. 4x over-decomposition: per-(host,salt) cost
-    # varies, so cores-count partitions leave the slowest task pinning
-    # the stage wall; ~4 waves pack the imbalance (measured: lifts
-    # low-core rounds ~10%).
-    n_parts = 4 * selected.sparkSession.sparkContext.defaultParallelism
+    # from AQE coalescing. One task per core, not more: each extra task
+    # costs ~0.2 s of a core in Python worker set-up (module docstring),
+    # more than the (host, salt) imbalance that extra waves would pack.
+    # Measured with perfbench crawl_backlog at local[4] on a 4-vCPU Xeon
+    # VM, medians of 10 interleaved runs: 16 fetch tasks a round and the
+    # hosts table re-read each round ran 366 urls/s; 4 fetch tasks and
+    # hosts read once (CrawlEngine.hosts) ran 575 urls/s.
+    n_parts = selected.sparkSession.sparkContext.defaultParallelism
     inp = (
         selected.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(n_salts)))
         .repartition(n_parts, F.col("host"), F.col("salt"))

@@ -13,15 +13,16 @@ SURVEY.md §2:
   so one hot host cannot skew a single window partition
   (L4, reference ``news.py:151-163``; SURVEY.md §4 skew row).
 
-Scale notes (10^10 frontier): the frontier is append-only and
-bucket-partitioned by ``url_hash``; the latest-attempt window and the
-seen anti-join both shuffle on ``url_sha``/``url_hash``, so bucketing
-the three state tables identically makes these joins co-partitioned
-(no shuffle of the big sides on a real cluster). The per-host top-k
-never sees the full frontier: the salt-local phase-1 prune cuts each
-host to ``budget`` rows per salt bucket before the global per-host
-window. The bloom pre-filter (crawl.bloom) drops >99% of seen
-candidates before the exact anti-join.
+Scale notes (10^10 frontier): the frontier is append-only. The state
+tables are plain parquet snapshot tables (tables/snapshot.py), not
+bucketed, so the slot anti-join in :func:`pending` shuffles both sides
+on ``(url_sha, attempt)`` every round, or broadcasts the smaller one;
+tables/bucketed.py has the ``url_hash``-bucketed layout that would
+co-partition it, unused by the engine. The per-host top-k never sees
+the full frontier: the salt-local phase-1 prune cuts each host to
+``budget`` rows per salt bucket before the global per-host window.
+Once the resolved set is large, the engine's bloom router
+(crawl.bloom) sends definite negatives around the exact anti-join.
 """
 
 from __future__ import annotations
@@ -58,9 +59,9 @@ def pending(frontier: DataFrame, resolved: DataFrame, round_no: int) -> DataFram
     guarantees one frontier row per slot, and every scheduled slot
     gets exactly one ``resolved`` row (ok/dead/retry — a retry appends
     the next slot's frontier row). So "pending" is a single anti-join
-    on the slot key — no window, no full-frontier sort. At 10^10 both
-    tables are bucket-partitioned by ``url_hash``, making this the
-    co-partitioned join the bloom shards pre-filter (SURVEY.md §7.2 M4).
+    on the slot key — no window, no full-frontier sort. Neither table
+    is bucketed, so the join shuffles (or broadcasts) its inputs; the
+    engine's bloom router can route rows around it (SURVEY.md §7.2 M4).
     """
     return (
         frontier

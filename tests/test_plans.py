@@ -82,8 +82,48 @@ def test_fetch_stage_keeps_explicit_partitioning(spark):
     )
     fetched = fetch_round(sel, SyntheticFetcher(SiteConfig()))
     # REPARTITION_BY_NUM (explicit) rather than plain hashpartitioning;
-    # 4x over-decomposition for wave packing
-    assert fetched.rdd.getNumPartitions() == 4 * spark.sparkContext.defaultParallelism
+    # one task per core: every extra Python task pays the worker's
+    # fixed set-up cost (crawl/fetch.py)
+    assert fetched.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_engine_resolves_hosts_once_into_a_local_relation(spark, tmp_path):
+    """The caller's hosts DataFrame (a Python RDD under
+    createDataFrame(list)) is read once, at the first round — never by
+    the constructor, init() or resume() — and every round's selection
+    then joins a LocalTableScan, not a re-run of that Python RDD."""
+    from news_crawler_spark.crawl import CrawlEngine, SyntheticFetcher
+    from news_crawler_spark.crawl import frontier as fops
+    from news_crawler_spark.fixtures import SiteConfig, host_rows, seed_rows
+    from news_crawler_spark.schemas import HOSTS
+
+    cfg = SiteConfig(seed=3, n_hosts=4, base_pages=10, n_seeds=2)
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def counted(row):
+        reads.add(1)
+        return row
+
+    hosts = spark.createDataFrame(
+        sc.parallelize(host_rows(cfg), 2).map(counted), HOSTS)
+    eng = CrawlEngine(spark, str(tmp_path / "state"), hosts,
+                      SyntheticFetcher(cfg), seed=cfg.seed)
+    eng.init(spark.createDataFrame(seed_rows(cfg), "url string, priority double"))
+    assert reads.value == 0
+
+    eng.run_round()
+    assert reads.value == cfg.n_hosts
+    eng.run_round()
+    assert reads.value == cfg.n_hosts
+    CrawlEngine(spark, str(tmp_path / "state"), hosts,
+                SyntheticFetcher(cfg), seed=cfg.seed).resume()
+    assert reads.value == cfg.n_hosts
+
+    sel_plan = plan_of(fops.select_candidates(eng._pending(eng.next_round),
+                                              eng.hosts), "simple")
+    assert "ExistingRDD" not in sel_plan
+    assert "LocalTableScan" in sel_plan
 
 
 def test_sid_assignment_has_no_single_partition_exchange(spark):
