@@ -7,8 +7,7 @@ One round = one declarative DataFrame DAG::
       → salt-local + per-host priority top-k          (selection)
       → (host, salt) repartition → fetch/parse UDF    (Python, one task per core)
       → link extraction (native) → first-wins anti-join vs frontier
-      → state appends: resolved, documents, frontier
-        + bloom delta build                           (Python, applyInPandas)
+      → state appends: frontier, documents, resolved
       → lineage row                                    (commit marker)
 
 State tables (all append-only snapshot tables):
@@ -19,7 +18,8 @@ State tables (all append-only snapshot tables):
   url_seen / dead / crawl_log are *views* of this one table, so a
   round commits three appends total, not five;
 * ``documents`` — parsed span sequences of fetched-ok pages;
-* ``lineage``   — the commit marker (counters + snapshot ids + digest).
+* ``lineage``   — the commit marker (counters + snapshot ids + the
+  url-seen digest).
 
 Exactly-once per URL: the lineage row for round r is appended *after*
 every state append; resume pins each table to the snapshot ids of the
@@ -46,11 +46,6 @@ from pyspark.sql import functions as F
 
 from news_crawler_spark import schemas
 from news_crawler_spark.crawl import frontier as frontier_ops
-from news_crawler_spark.crawl.bloom import (
-    BloomShards,
-    build_shard_blobs,
-    split_by_bloom,
-)
 from news_crawler_spark.crawl.fetch import (
     Fetcher,
     enrich_candidates,
@@ -75,8 +70,6 @@ def url_priority_col(seed: int, url_col: str = "url") -> F.Column:
 class CrawlEngine:
     def __init__(self, spark: SparkSession, state_dir: str, hosts: DataFrame,
                  fetcher: Fetcher, seed: int = 42, max_attempts: int = 3,
-                 n_salts: int = 8, use_bloom: bool = True,
-                 bloom_shards: int = 16, bloom_min_resolved: int = 2_000_000,
                  retry_jitter_span: int = 0, compact_ratio: float = 4.0,
                  compact_min_resolved: int = 100_000,
                  archive_dir: str | None = None,
@@ -88,14 +81,6 @@ class CrawlEngine:
         self.seed = seed
         self.max_attempts = max_attempts
         self.retry_jitter_span = retry_jitter_span
-        self.n_salts = n_salts
-        self.bloom = BloomShards(n_shards=bloom_shards) if use_bloom else None
-        self._bloom_bc = None
-        # below this resolved-set size the exact anti-join beats the
-        # probe's Arrow round trip (measured in-sandbox); the shards are
-        # still maintained so the switch-over is seamless at scale
-        self.bloom_min_resolved = bloom_min_resolved
-        self._resolved_n = 0
         # auto-compaction (frontier is append-only; resolved slots
         # accumulate and every selection anti-join rescans them):
         # compact when the resolved rows sitting in the frontier exceed
@@ -264,7 +249,7 @@ class CrawlEngine:
         self.next_round = 0
 
     def _commit_lineage(self, round_no: int, scheduled: int, ok: int,
-                        errors: int, new_urls: int, bloom_digest: str) -> None:
+                        errors: int, new_urls: int, seen_digest: str) -> None:
         # driver-side write (SnapshotTable.append_rows): one record per
         # round does not justify scheduling a Spark job — the job/task
         # round trip was a measurable per-round fixed cost that the
@@ -274,7 +259,7 @@ class CrawlEngine:
               self.frontier.current_snapshot(),
               self.resolved.current_snapshot(),
               self.documents.current_snapshot(),
-              bloom_digest,
+              seen_digest,
               _dt.datetime.now(_dt.timezone.utc).isoformat())])
 
     def resume(self) -> int:
@@ -283,15 +268,26 @@ class CrawlEngine:
         Returns the next round to run. Any appends from a round whose
         lineage row never committed are rolled back (never replayed
         partially) — the kill/resume invariant of SURVEY.md §7.2 M5.
+        Raises when the pinned resolved table disagrees with the
+        lineage: its url-seen digest must equal the last row's and, as
+        every scheduled slot resolves to exactly one row (ok, dead or
+        retry), its row count must equal the rows' summed ``scheduled``.
         """
-        rows = self.lineage.read().orderBy(F.col("round").desc()).limit(1).collect()
+        rows = self.lineage.read().collect()
         if not rows:
             raise RuntimeError("resume() before init(): no lineage rows")
-        last = rows[0]
+        last = max(rows, key=lambda row: row["round"])
         self.frontier.rollback(last.frontier_snapshot)
         self.resolved.rollback(last.resolved_snapshot)
         self.documents.rollback(last.documents_snapshot)
-        self._rebuild_seen_digest()
+        n_resolved = self._rebuild_seen_digest()
+        # older rows hold "<url-seen digest>:<filter digest>"
+        committed = last.bloom_digest.split(":")[0]
+        if ((committed and committed != self._seen_digest())
+                or n_resolved != sum(row.scheduled for row in rows)):
+            raise RuntimeError(
+                "url-seen digest or resolved row count mismatch after rebuild "
+                "— resolved table and lineage row disagree (torn state?)")
         # exact compaction counters (one count + one semi-join job,
         # resume-only — never per-round)
         self._frontier_rows = self.frontier.read().count()
@@ -301,74 +297,12 @@ class CrawlEngine:
                   ["url_sha", "attempt"], "left_semi")
             .count()
         )
-        if self.bloom is not None:
-            self._rebuild_bloom()
-            committed = last.bloom_digest.split(":")[-1] if last.bloom_digest else ""
-            if committed and committed != self.bloom.digest():
-                raise RuntimeError(
-                    "bloom shard digest mismatch after rebuild — resolved "
-                    "table and lineage row disagree (torn state?)")
         self.next_round = last["round"] + 1
         return self.next_round
 
-    # -- pending: the scale-critical anti-join, bloom-prefiltered ---------
+    # -- pending: the scale-critical slot anti-join (crawl/frontier.py) --
     def _pending(self, round_no: int) -> DataFrame:
-        pend0 = self.frontier.read().filter(F.col("not_before") <= F.lit(round_no))
-        # the probe pays off only while it can actually prune: its
-        # benefit is the join-input rows it removes (the definite
-        # negatives ≈ the unresolved fraction of the frontier), its
-        # cost is probing every pending row. Once most frontier rows
-        # are resolved (compaction fires at compact_ratio, default
-        # 80%) the positives go through the exact anti-join anyway, so
-        # below ~30% prunable rows the probe is pure overhead — skip
-        # it and anti-join directly. Counters are exact per-round
-        # deltas; no extra jobs.
-        frac_resolved = self._resolved_in_frontier / max(1, self._frontier_rows)
-        if (self.bloom is None or self._resolved_n < self.bloom_min_resolved
-                or frac_resolved > 0.7):
-            return pend0.join(self.resolved.read().select("url_sha", "attempt"),
-                              ["url_sha", "attempt"], "left_anti")
-        if self._bloom_bc is None:
-            self._bloom_bc = self.spark.sparkContext.broadcast(self.bloom.snapshot())
-        probed = split_by_bloom(pend0, self._bloom_bc)
-        negatives = probed.filter(F.col("bloom_neg")).drop("bloom_neg")
-        positives = (
-            probed.filter(~F.col("bloom_neg")).drop("bloom_neg")
-            .join(self.resolved.read().select("url_sha", "attempt"),
-                  ["url_sha", "attempt"], "left_anti")
-        )
-        return negatives.unionByName(positives)
-
-    def _bloom_absorb_blobs(self, blobs: list) -> None:
-        """OR this round's distributed-built delta shards into the live
-        set; regrow (full distributed rebuild at 4x) if any shard
-        passed capacity. Only shard blobs ever reach the driver."""
-        if self.bloom is None:
-            return
-        self.bloom.absorb_blobs(blobs)
-        if self.bloom.needs_regrow():
-            self._rebuild_bloom(capacity=self.bloom.capacity * 4)
-            return  # rebuild already rebroadcast
-        if self._bloom_bc is not None:
-            self._bloom_bc.destroy()
-        self._bloom_bc = self.spark.sparkContext.broadcast(self.bloom.snapshot())
-
-    def _rebuild_bloom(self, capacity: int | None = None) -> None:
-        """Full rebuild from the resolved table (resume / regrow path).
-
-        Runs as a Spark job: applyInPandas per shard_id builds each
-        shard's bit array executor-side (crawl.bloom.build_shard_blobs);
-        only the fixed-size blobs come back to the driver — at 10^10
-        resolved slots the keys (~80 GB) never leave the executors.
-        """
-        cap = capacity or (self.bloom.capacity if self.bloom else 1 << 20)
-        self.bloom = BloomShards(n_shards=self.bloom.n_shards, capacity=cap)
-        self.bloom.absorb_blobs(
-            build_shard_blobs(self.resolved.read().select("url_hash", "attempt"),
-                              self.bloom.n_shards, self.bloom.m_bits))
-        if self._bloom_bc is not None:
-            self._bloom_bc.destroy()
-        self._bloom_bc = self.spark.sparkContext.broadcast(self.bloom.snapshot())
+        return frontier_ops.pending(self.frontier.read(), self.resolved.read(), round_no)
 
     def _retry_gap_col(self) -> F.Column:
         """Exponential backoff in round units (reference utils/retry.py:
@@ -392,7 +326,7 @@ class CrawlEngine:
         t0 = time.perf_counter()
         self._maybe_compact()
         selected = frontier_ops.select_candidates(self._pending(r), self.hosts)
-        fetched = fetch_round(selected, self.fetcher, n_salts=self.n_salts)
+        fetched = fetch_round(selected, self.fetcher)
         t = {"_select_build": round(time.perf_counter() - t0, 3)}
 
         # ONE pass over the fetch UDF: its output lands directly in a
@@ -456,7 +390,7 @@ class CrawlEngine:
             import shutil as _shutil
 
             _shutil.rmtree(staging, ignore_errors=True)
-            self._commit_lineage(r, 0, 0, 0, 0, self._state_digest())
+            self._commit_lineage(r, 0, 0, 0, 0, self._seen_digest())
             self.next_round = r + 1
             self.last_timings = t
             return {"round": r, "scheduled": 0, "ok": 0, "errors": 0, "new_urls": 0}
@@ -468,7 +402,6 @@ class CrawlEngine:
 
         self._seen_xor ^= int(agg["ok_xor"])
         self._seen_n += n_ok
-        self._resolved_n += scheduled
         n_err = scheduled - n_ok
 
         # first-wins (D2): candidates never re-enter the frontier —
@@ -499,18 +432,14 @@ class CrawlEngine:
         )
 
         # appends are independent (each atomic; the lineage row below is
-        # the round's commit marker) → overlap the frontier write and
-        # the bloom delta-shard build (both read the immutable staging
-        # dir). The documents AND resolved appends both adopt staged
-        # partitions zero-copy (the files carry round/disposition as
-        # regular columns; reads project each table's schema) — the
-        # resolved table's former 1-job re-read + rewrite per round is
-        # now a driver-side manifest publish. New-URL count rides the
-        # frontier append as an Observation — no separate
-        # snapshot-delta count job.
+        # the round's commit marker). The documents AND resolved appends
+        # both adopt staged partitions zero-copy (the files carry
+        # round/disposition as regular columns; reads project each
+        # table's schema) — the resolved table's former 1-job re-read +
+        # rewrite per round is now a driver-side manifest publish.
+        # New-URL count rides the frontier append as an Observation — no
+        # separate snapshot-delta count job.
         t1 = time.perf_counter()
-        from concurrent.futures import ThreadPoolExecutor
-
         obs_frontier = Observation()
         # REBALANCE (AQE advisory-size repartition) before the write:
         # in the mid-crawl steady state nearly every candidate is
@@ -528,25 +457,13 @@ class CrawlEngine:
             .observe(obs_frontier,
                      F.count(F.when(F.col("attempt") == 0, 1)).alias("n_new"))
         )
+        self.frontier.append(frontier_append)
         ok_dir = os.path.join(staging, "dispo=ok")
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(self.frontier.append, frontier_append),
-            ]
-            blob_fut = (
-                pool.submit(build_shard_blobs,
-                            staged.select("url_hash", "attempt"),
-                            self.bloom.n_shards, self.bloom.m_bits)
-                if self.bloom is not None else None
-            )
-            if os.path.isdir(ok_dir):
-                self.documents.append_dir(ok_dir)
-            self.resolved.append_dir(
-                [p for d in ("ok", "dead", "retry")
-                 if os.path.isdir(p := os.path.join(staging, f"dispo={d}"))])
-            for f in futs:
-                f.result()
-            blobs = blob_fut.result() if blob_fut is not None else None
+        if os.path.isdir(ok_dir):
+            self.documents.append_dir(ok_dir)
+        self.resolved.append_dir(
+            [p for d in ("ok", "dead", "retry")
+             if os.path.isdir(p := os.path.join(staging, f"dispo={d}"))])
         t["state_appends"] = round(time.perf_counter() - t1, 3)
 
         if self.archive_dir is not None and os.path.isdir(ok_dir):
@@ -555,10 +472,6 @@ class CrawlEngine:
             t["archive"] = round(time.perf_counter() - t1, 3)
 
         t1 = time.perf_counter()
-        if blobs is not None:
-            # absorb after the resolved append: a regrow rebuild reads
-            # the resolved table, which must already include this round
-            self._bloom_absorb_blobs(blobs)
         n_new = int(obs_frontier.get["n_new"])
         # compaction bookkeeping: each scheduled fetch resolves exactly
         # one frontier (url_sha, attempt) slot; the frontier gained the
@@ -567,7 +480,7 @@ class CrawlEngine:
         self._resolved_in_frontier += scheduled
         self._frontier_rows += n_new + n_retry
         self._commit_lineage(r, scheduled, n_ok, n_err, n_new,
-                             self._state_digest())
+                             self._seen_digest())
         t["lineage"] = round(time.perf_counter() - t1, 3)
         self.next_round = r + 1
         self.last_timings = t
@@ -633,13 +546,9 @@ class CrawlEngine:
         return hashlib.sha256(
             f"{self._seen_xor}|{self._seen_n}".encode()).hexdigest()[:16]
 
-    def _state_digest(self) -> str:
-        """Lineage audit digest: seen digest + bloom shard digest."""
-        if self.bloom is None:
-            return self._seen_digest()
-        return f"{self._seen_digest()}:{self.bloom.digest()}"
-
-    def _rebuild_seen_digest(self) -> None:
+    def _rebuild_seen_digest(self) -> int:
+        """Rebuild the url-seen digest from the resolved table; returns
+        the table's row count."""
         row = self.resolved.read().agg(
             F.coalesce(
                 F.expr("bit_xor(case when disposition = 'ok' then url_hash end)"),
@@ -648,7 +557,7 @@ class CrawlEngine:
             F.count("*").alias("n"),
         ).collect()[0]
         self._seen_xor, self._seen_n = int(row["s"]), int(row["n_ok"])
-        self._resolved_n = int(row["n"])
+        return int(row["n"])
 
     def run(self, n_rounds: int) -> list[dict]:
         return [self.run_round() for _ in range(n_rounds)]

@@ -1,13 +1,13 @@
-"""Batch fetch + parse as a vectorized Arrow UDF: one of the round's
-two Python stages (the other is the bloom delta build in crawl/bloom.py).
+"""Batch fetch + parse as a vectorized Arrow UDF: the round's only
+Python stage.
 
 The reference fetches serially with requests/cloudscraper and parses
 with BeautifulSoup (``news.py:85-124``, ``asec.py:56-61``); here a
 fetch round is one ``mapInPandas`` pass over the selected candidates,
-repartitioned by ``(host, salt)`` so (a) one hot host spreads over k
-partitions (skew), (b) politeness delay can be enforced per
-partition-host group (each of the k salt slices sleeps
-``crawl_delay * k``, preserving the per-host aggregate rate).
+repartitioned by ``(host, salt)`` with the selection's
+``frontier.N_SALTS`` so one hot host spreads over several partitions.
+Politeness is not enforced here: the selection's per-host budget
+already caps what a host gets per round (crawl/frontier.py).
 
 Every Python task has a fixed cost before any row is fetched: the
 worker's set-up (``pyspark.worker_util.setup_spark_files``) calls
@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from news_crawler_spark import schemas
+from news_crawler_spark.crawl.frontier import N_SALTS
 from news_crawler_spark.fixtures.sitegen import EXCLUDED_HOST, SiteConfig, synth_page
 
 
@@ -113,14 +114,11 @@ class HttpFetcher:
                     "published": None, "spans": None}
 
 
-def fetch_round(selected: DataFrame, fetcher: Fetcher, n_salts: int = 8,
-                respect_delay: bool = False) -> DataFrame:
+def fetch_round(selected: DataFrame, fetcher: Fetcher) -> DataFrame:
     """Fetch+parse the selected candidates; returns schemas.FETCHED.
 
-    ``selected`` must carry url/url_hash/url_sha/host/seq/crawl_delay.
-    Vectorized per Arrow batch; politeness sleeps (optional) happen
-    between rows of one host inside a partition, scaled by the salt
-    fan-out so the per-host aggregate rate honors crawl_delay.
+    ``selected`` must carry url/url_hash/url_sha/host/path/priority/
+    discovered_round/attempt/seq. Vectorized per Arrow batch.
     """
     passthrough = ["url", "url_hash", "url_sha", "host", "path", "priority",
                    "discovered_round", "attempt", "seq"]
@@ -137,9 +135,9 @@ def fetch_round(selected: DataFrame, fetcher: Fetcher, n_salts: int = 8,
     # hosts read once (CrawlEngine.hosts) ran 575 urls/s.
     n_parts = selected.sparkSession.sparkContext.defaultParallelism
     inp = (
-        selected.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(n_salts)))
+        selected.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(N_SALTS)))
         .repartition(n_parts, F.col("host"), F.col("salt"))
-        .select(*passthrough, "crawl_delay")
+        .select(*passthrough)
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -148,8 +146,6 @@ def fetch_round(selected: DataFrame, fetcher: Fetcher, n_salts: int = 8,
                    (*passthrough, "status", "title", "published", "spans")}
             for row in pdf.itertuples(index=False):
                 page = fetcher.fetch(row.url)
-                if respect_delay and row.crawl_delay:  # pragma: no cover - timing
-                    time.sleep(row.crawl_delay * n_salts)
                 out["url"].append(row.url)
                 out["url_hash"].append(row.url_hash)
                 out["url_sha"].append(row.url_sha)

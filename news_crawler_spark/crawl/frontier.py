@@ -21,8 +21,6 @@ tables/bucketed.py has the ``url_hash``-bucketed layout that would
 co-partition it, unused by the engine. The per-host top-k never sees
 the full frontier: the salt-local phase-1 prune cuts each host to
 ``budget`` rows per salt bucket before the global per-host window.
-Once the resolved set is large, the engine's bloom router
-(crawl.bloom) sends definite negatives around the exact anti-join.
 """
 
 from __future__ import annotations
@@ -30,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# salt fan-out for the hot-host pre-prune; at cluster scale set to
+# salt fan-out for the hot-host pre-prune and the fetch stage's
+# (host, salt) repartition; at cluster scale set to
 # ~(executors * cores) / n_active_hosts, floor 8
 N_SALTS = 8
 
@@ -60,8 +59,7 @@ def pending(frontier: DataFrame, resolved: DataFrame, round_no: int) -> DataFram
     gets exactly one ``resolved`` row (ok/dead/retry — a retry appends
     the next slot's frontier row). So "pending" is a single anti-join
     on the slot key — no window, no full-frontier sort. Neither table
-    is bucketed, so the join shuffles (or broadcasts) its inputs; the
-    engine's bloom router can route rows around it (SURVEY.md §7.2 M4).
+    is bucketed, so the join shuffles (or broadcasts) its inputs.
     """
     return (
         frontier
@@ -73,7 +71,7 @@ def pending(frontier: DataFrame, resolved: DataFrame, round_no: int) -> DataFram
 
 def select_candidates(cand: DataFrame, hosts: DataFrame) -> DataFrame:
     """The round's fetch set with per-host sequence numbers, from a
-    prebuilt pending set (see :func:`pending` / engine bloom path).
+    prebuilt pending set (see :func:`pending`).
 
     Returns pending columns + ``seq`` (1-based per-host fetch order:
     priority desc, url asc — the oracle's total order) + host columns.

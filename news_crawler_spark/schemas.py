@@ -118,6 +118,8 @@ LINEAGE = T.StructType(
         T.StructField("frontier_snapshot", T.IntegerType(), False),
         T.StructField("resolved_snapshot", T.IntegerType(), False),
         T.StructField("documents_snapshot", T.IntegerType(), False),
+        # keeps its name for on-disk compatibility; holds the url-seen
+        # digest (older rows: "<url-seen digest>:<bloom shard digest>")
         T.StructField("bloom_digest", T.StringType(), False),
         T.StructField("committed_at", T.StringType(), False),
     ]

@@ -27,11 +27,8 @@ def crawl(spark, tmp_path_factory):
     # parse_html=True: fetch renders real HTML and reparses it with the
     # production html_to_spans parser — the oracle match below therefore
     # also proves the HTML→spans round-trip on every fetched page
-    # bloom_min_resolved=0 forces the bloom probe path so the oracle
-    # match also covers it (the engine would skip it at this tiny size)
     eng = CrawlEngine(spark, state, hosts, SyntheticFetcher(CFG, parse_html=True),
-                      seed=CFG.seed, max_attempts=CFG.max_attempts,
-                      bloom_min_resolved=0)
+                      seed=CFG.seed, max_attempts=CFG.max_attempts)
     eng.init(spark.createDataFrame(seed_rows(CFG), "url string, priority double"))
     stats = eng.run(N_ROUNDS)
     oracle = CrawlOracle(CFG).run(N_ROUNDS)

@@ -30,6 +30,29 @@ def test_bloom_never_false_negative(keys):
         assert not probe_negative_mask(b.snapshot(), arr).any()
 
 
+def test_bloom_no_false_negatives_and_low_fpp():
+    rng = np.random.default_rng(0)
+    members = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
+    others = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
+    others = np.setdiff1d(others, members)
+    b = BloomShards(n_shards=8, capacity=10_000)
+    b.add(members)
+    snap = b.snapshot()
+    assert not probe_negative_mask(snap, members).any(), "false negative!"
+    fpp = 1.0 - probe_negative_mask(snap, others).mean()
+    assert fpp < 0.02, f"fpp too high: {fpp}"
+
+
+def test_bloom_digest_is_rebuild_invariant():
+    keys = np.arange(1000, dtype=np.int64) * 7919
+    a = BloomShards(n_shards=4, capacity=100)
+    for chunk in np.array_split(keys, 7):  # incremental adds
+        a.add(chunk)
+    b = BloomShards(n_shards=4, capacity=100_000)  # different capacity
+    b.add(keys)  # one-shot rebuild
+    assert a.digest() == b.digest()
+
+
 @given(st.integers(min_value=0, max_value=10**9), st.integers(0, 50))
 @settings(max_examples=50, deadline=None)
 def test_html_roundtrip_for_any_page(seed, page_idx):

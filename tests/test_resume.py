@@ -1,46 +1,22 @@
-"""M4 (bloom shards) + M5 (kill/resume, zero-replay) tests."""
+"""M5 (kill/resume, zero-replay) and compaction tests."""
 
 from __future__ import annotations
 
-import numpy as np
+import glob
+import os
+import shutil
+
 import pytest
 
 from news_crawler_spark.crawl import CrawlEngine, SyntheticFetcher
-from news_crawler_spark.crawl.bloom import BloomShards, probe_negative_mask
 from news_crawler_spark.fixtures import CrawlOracle, SiteConfig, host_rows, seed_rows
 from news_crawler_spark.schemas import HOSTS
 
 CFG = SiteConfig(seed=99, n_hosts=5, base_pages=24, hot_factor=4, n_seeds=3)
 
 
-# ---------------------------------------------------------------- bloom unit
-def test_bloom_no_false_negatives_and_low_fpp():
-    rng = np.random.default_rng(0)
-    members = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
-    others = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
-    others = np.setdiff1d(others, members)
-    b = BloomShards(n_shards=8, capacity=10_000)
-    b.add(members)
-    snap = b.snapshot()
-    assert not probe_negative_mask(snap, members).any(), "false negative!"
-    fpp = 1.0 - probe_negative_mask(snap, others).mean()
-    assert fpp < 0.02, f"fpp too high: {fpp}"
-
-
-def test_bloom_digest_is_rebuild_invariant():
-    keys = np.arange(1000, dtype=np.int64) * 7919
-    a = BloomShards(n_shards=4, capacity=100)
-    for chunk in np.array_split(keys, 7):  # incremental adds
-        a.add(chunk)
-    b = BloomShards(n_shards=4, capacity=100_000)  # different capacity
-    b.add(keys)  # one-shot rebuild
-    assert a.digest() == b.digest()
-
-
-# ------------------------------------------------------------- kill/resume
 def _mk_engine(spark, state, **kw):
     hosts = spark.createDataFrame(host_rows(CFG), HOSTS)
-    kw.setdefault("bloom_min_resolved", 0)  # force the probe path
     return CrawlEngine(spark, state, hosts, SyntheticFetcher(CFG),
                        seed=CFG.seed, max_attempts=CFG.max_attempts, **kw)
 
@@ -76,16 +52,37 @@ def test_kill_resume_replays_no_url(spark, tmp_path):
     assert dup == 0
 
 
-def test_resume_validates_bloom_digest(spark, tmp_path):
-    state = str(tmp_path / "state")
+def _two_rounds(spark, state):
     eng = _mk_engine(spark, state)
     eng.init(spark.createDataFrame(seed_rows(CFG), "url string, priority double"))
     eng.run(2)
-    committed = eng.bloom.digest()
+    return eng
 
-    eng2 = _mk_engine(spark, state)
-    eng2.resume()
-    assert eng2.bloom.digest() == committed
+
+@pytest.mark.parametrize("dispo", ["ok", "retry"])
+def test_resume_rejects_torn_resolved_table(spark, tmp_path, dispo):
+    """Losing one committed file of the resolved table is torn state
+    that rollback cannot repair: an ``ok`` file moves the url-seen
+    digest, a ``retry`` file only the row count. resume() must refuse
+    both rather than rebuild on the damaged table."""
+    state = str(tmp_path / "state")
+    eng = _two_rounds(spark, state)
+    files = sorted(glob.glob(os.path.join(
+        eng.documents.data_dir, "staging-*", f"dispo={dispo}", "*.parquet")))
+    assert files, f"fixture crawl committed no dispo={dispo} file"
+    os.remove(files[0])
+    with pytest.raises(RuntimeError, match="torn state"):
+        _mk_engine(spark, state).resume()
+
+
+def test_resume_accepts_two_part_lineage_digest(spark, tmp_path):
+    """Lineage rows written while the engine also kept a bloom shard
+    digest hold "<url-seen digest>:<shard digest>"; resume checks the
+    first part, so such state still resumes."""
+    state = str(tmp_path / "state")
+    eng = _two_rounds(spark, state)
+    eng._commit_lineage(2, 0, 0, 0, 0, eng._seen_digest() + ":00ff")
+    assert _mk_engine(spark, state).resume() == 3
 
 
 def test_compaction_mid_crawl_preserves_semantics(spark, tmp_path):
@@ -172,28 +169,13 @@ def test_kill_after_compaction_resumes_cleanly(spark, tmp_path):
     assert log == sorted(oracle.crawl_log)
 
 
-def test_bloom_off_equals_bloom_on(spark, tmp_path):
-    """The bloom is a router, not a semantic: same crawl either way."""
-    a = _mk_engine(spark, str(tmp_path / "a"), use_bloom=True)
-    b = _mk_engine(spark, str(tmp_path / "b"), use_bloom=False)
-    seeds = spark.createDataFrame(seed_rows(CFG), "url string, priority double")
-    a.init(seeds)
-    b.init(seeds)
-    a.run(3)
-    b.run(3)
-    la = sorted((r["round"], r.host, r.seq, r.url) for r in a.crawl_log_df().collect())
-    lb = sorted((r["round"], r.host, r.seq, r.url) for r in b.crawl_log_df().collect())
-    assert la == lb
-
-
 def test_kill_resume_torn_write_matrix(spark, tmp_path):
     """Chaos matrix for the commit protocol: the three state appends
-    of a round are concurrent, so a kill can leave ANY subset of
-    {resolved, documents, frontier} written without the lineage
-    marker. Every such torn state must roll back on resume and finish
-    bit-identical to the oracle, with zero (url, attempt) replays."""
-    import shutil
-
+    of a round are independent atomic commits, so a kill can leave a
+    subset of {resolved, documents, frontier} written without the
+    lineage marker. Every such torn state must roll back on resume and
+    finish bit-identical to the oracle, with zero (url, attempt)
+    replays."""
     base = str(tmp_path / "base")
     eng = _mk_engine(spark, base)
     eng.init(spark.createDataFrame(seed_rows(CFG), "url string, priority double"))
