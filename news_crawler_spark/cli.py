@@ -146,13 +146,14 @@ def main(argv: list[str] | None = None) -> int:
     from news_crawler_spark.fixtures import SiteConfig, host_rows, seed_rows
     from news_crawler_spark.schemas import HOSTS
     from news_crawler_spark.session import get_spark
+    from news_crawler_spark.tables import local_frame
 
     spark = get_spark("crawl-cli", cpus=args.cpus)
     cfg = SiteConfig(seed=args.seed, n_hosts=args.n_hosts,
                      base_pages=args.pages_per_host, n_seeds=args.n_seeds,
                      richness=args.richness)
     fetcher = HttpFetcher() if args.http else SyntheticFetcher(cfg, parse_html=True)
-    hosts = spark.createDataFrame(host_rows(cfg), HOSTS)
+    hosts = local_frame(spark, host_rows(cfg), HOSTS)
     eng = CrawlEngine(spark, args.state_dir, hosts, fetcher, seed=cfg.seed,
                       max_attempts=args.max_attempts,
                       retry_jitter_span=args.retry_jitter)
@@ -160,8 +161,8 @@ def main(argv: list[str] | None = None) -> int:
         nxt = eng.resume()
         print(json.dumps({"resumed_at_round": nxt}))
     else:
-        eng.init(spark.createDataFrame(seed_rows(cfg),
-                                       "url string, priority double"))
+        eng.init(local_frame(spark, seed_rows(cfg),
+                             "url string, priority double"))
     for _ in range(args.rounds):
         print(json.dumps(eng.run_round()))
     print(json.dumps({

@@ -52,11 +52,7 @@ from news_crawler_spark.crawl.fetch import (
     extract_links,
     fetch_round,
 )
-from news_crawler_spark.tables import SnapshotTable
-
-RETRYABLE = (503, -1)  # reference retry.py triggers; informational only —
-# the attempt cap applies to EVERY non-ok/non-404 status (an unknown
-# status must not retry unboundedly)
+from news_crawler_spark.tables import SnapshotTable, local_frame
 
 
 def url_priority_col(seed: int, url_col: str = "url") -> F.Column:
@@ -118,19 +114,20 @@ class CrawlEngine:
         first use, so the constructor, :meth:`init` and :meth:`resume`
         submit no job for it — and kept as a driver-local relation.
 
-        Callers build hosts with ``createDataFrame(list)``: a Python RDD
-        that each round's broadcast join would otherwise re-run as
+        Callers build hosts from a list of rows: a Python RDD that each
+        round's broadcast join would otherwise re-run as
         ``defaultParallelism`` Python tasks, each paying the Python
         worker's fixed start-up cost (see crawl/fetch.py). The local
-        relation plans as ``LocalTableScan``, whose broadcast runs no
-        Python. The broadcast join already collects hosts to the
-        driver every round, so this holds no more there than before.
+        relation (tables/local.py) plans as ``LocalTableScan``, whose
+        broadcast runs no Python. The broadcast join already collects
+        hosts to the driver every round, so this holds no more there
+        than before.
         Later changes to the source table are not seen: a new engine
         (``resume()``) picks them up.
         """
         if self._hosts_local is None:
             src = self._hosts_src
-            self._hosts_local = self.spark.createDataFrame(src.toArrow(), src.schema)
+            self._hosts_local = local_frame(self.spark, src.toArrow(), src.schema)
         return self._hosts_local
 
     # -- views over resolved ----------------------------------------------

@@ -11,13 +11,18 @@ already caps what a host gets per round (crawl/frontier.py).
 
 Every Python task has a fixed cost before any row is fetched: the
 worker's set-up (``pyspark.worker_util.setup_spark_files``) calls
-``importlib.invalidate_caches()``, and on Python 3.11 each zipimporter
-over ``pyspark.zip`` then re-reads the zip's directory. Measured on a
-4-vCPU Xeon VM (Spark 4.1.2, Python 3.11): an identity ``mapInPandas``
-over 4,000 rows takes ~0.27 s in 4 tasks and ~3.6 s in 64 at
-``local[4]``, i.e. ~0.2 s of a core per task, while rendering and
-parsing the 1,776 synthetic pages of a perfbench crawl_backlog round
-takes ~0.42 s of CPU in all. So the stage runs one task per core.
+``importlib.invalidate_caches()``, and on Python 3.11 every
+zipimporter in the worker then re-reads its archive's directory. The
+worker holds 16 of them: ``pyspark.zip`` and its package dirs, the
+py4j zip, and the spark-core jar, whose 5,359 entries are the largest
+share (~36 ms a re-read). Measured on a 4-vCPU Xeon VM (Spark 4.1.2,
+Python 3.11.7, ``local[4]``): the call takes 0.20–0.25 s inside a
+task, and an identity ``mapInPandas`` over 1,776 rows takes ~0.35 s
+in 1 task, ~0.45 s in 4 and ~1.3 s in 16 (native: ~0.07 s), while
+rendering and parsing the 1,776 synthetic pages of a perfbench
+crawl_backlog round takes ~0.42 s of CPU in all. So the stage runs one
+task per core, and nothing else on a round's path runs Python: empty
+state tables read as driver-local relations (tables/local.py).
 
 Fetchers are pluggable. :class:`SyntheticFetcher` computes pages as a
 pure function of the URL (fixtures.sitegen) — deterministic, no I/O,
@@ -127,8 +132,10 @@ def fetch_round(selected: DataFrame, fetcher: Fetcher) -> DataFrame:
     # it onto a couple of workers (measured: coalesced to 2 tasks and
     # serialized the whole fetch). An explicit numPartitions is exempt
     # from AQE coalescing. One task per core, not more: each extra task
-    # costs ~0.2 s of a core in Python worker set-up (module docstring),
-    # more than the (host, salt) imbalance that extra waves would pack.
+    # costs 0.20-0.25 s of a core in Python worker set-up, where
+    # importlib.invalidate_caches() makes 16 zipimporters re-read their
+    # archives, the spark-core jar most (module docstring) — more than
+    # the (host, salt) imbalance that extra waves would pack.
     # Measured with perfbench crawl_backlog at local[4] on a 4-vCPU Xeon
     # VM, medians of 10 interleaved runs: 16 fetch tasks a round and the
     # hosts table re-read each round ran 366 urls/s; 4 fetch tasks and

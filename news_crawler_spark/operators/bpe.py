@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from news_crawler_spark.tables import local_frame
+
 _SYM_RE = r"\\(([^)]*)\\)"  # regexp_extract_all pattern (escaped for expr)
 
 
@@ -96,9 +98,9 @@ def bpe_train(words: DataFrame, n_merges: int = 3,
                  .agg(F.countDistinct("s")).collect()[0][0])
         out.append((step, pair, left + right, c, int(vocab)))
 
-    return spark.createDataFrame(
-        out, "step int, pair string, merged string, "
-             "pair_count long, vocab_size long")
+    return local_frame(spark, out,
+                       "step int, pair string, merged string, "
+                       "pair_count long, vocab_size long")
 
 
 def bpe_segment(df: DataFrame, merges: list[tuple[str, str]],

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from news_crawler_spark.tables import local_frame
+
 
 def _sql_double(x: float) -> str:
     """SQL double literal that parses back to exactly this double.
@@ -332,7 +334,7 @@ def kmeans_refine(corpus: DataFrame, centroids: DataFrame, iters: int = 3,
         cent = [(int(r["cell"]), r["cvec"]) for r in rows]
     if isinstance(cent, DataFrame):  # iters == 0
         return cent
-    return spark.createDataFrame([(c, v) for c, v in cent], schema)
+    return local_frame(spark, cent, schema)
 
 
 def rademacher_signs(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:

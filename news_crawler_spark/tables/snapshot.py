@@ -26,6 +26,11 @@ Layout::
     <root>/<name>/data/snap-<id>-<uuid>/part-*.parquet
     <root>/<name>/_manifest/<id:08d>.json   # {"id", "parent", "dirs": [...]}
     <root>/<name>/_manifest/CURRENT         # text: latest id
+
+Manifest ``dirs`` are relative to ``<root>/<name>`` (an adopted dir of
+a sibling table reads ``../<other>/data/...``), so a copied or moved
+state root reads its own files. Absolute entries, as older manifests
+hold, are read as they are.
 """
 
 from __future__ import annotations
@@ -36,6 +41,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from news_crawler_spark.tables.local import local_frame
 
 
 class SnapshotTable:
@@ -76,10 +83,14 @@ class SnapshotTable:
         os.replace(cur_tmp, os.path.join(self.manifest_dir, "CURRENT"))
         return sid
 
+    def _entry(self, path: str) -> str:
+        """Manifest form of a data dir: relative to the table dir."""
+        return os.path.relpath(path, self.dir)
+
     def _write_data(self, df: DataFrame, sid: int) -> str:
         d = os.path.join(self.data_dir, f"snap-{sid:08d}-{uuid.uuid4().hex[:8]}")
         df.write.mode("overwrite").parquet(d)
-        return d
+        return self._entry(d)
 
     # -- operations ------------------------------------------------------
     def append(self, df: DataFrame) -> int:
@@ -100,7 +111,7 @@ class SnapshotTable:
         sid = parent + 1
         dirs = self._manifest(parent)["dirs"] if parent >= 0 else []
         return self._publish({"id": sid, "parent": parent,
-                              "dirs": [*dirs, *paths]})
+                              "dirs": [*dirs, *map(self._entry, paths)]})
 
     _PA_TYPES = {
         "integer": "int32", "long": "int64", "string": "string",
@@ -147,7 +158,8 @@ class SnapshotTable:
         os.makedirs(d, exist_ok=True)
         pq.write_table(table, os.path.join(d, "part-00000.parquet"))
         dirs = self._manifest(parent)["dirs"] if parent >= 0 else []
-        return self._publish({"id": sid, "parent": parent, "dirs": [*dirs, d]})
+        return self._publish({"id": sid, "parent": parent,
+                              "dirs": [*dirs, self._entry(d)]})
 
     def overwrite(self, df: DataFrame) -> int:
         parent = self.current_snapshot()
@@ -168,27 +180,29 @@ class SnapshotTable:
         return self.append(novel)
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
-        """Table as-of a snapshot (default: current). Empty DF if none."""
+        """Table as-of a snapshot (default: current). An empty table is
+        a driver-local empty relation (tables/local.py): it runs no
+        Python tasks and the optimizer prunes joins against it."""
         sid = self.current_snapshot() if snapshot_id is None else snapshot_id
-        if sid < 0:
-            return self.spark.createDataFrame([], self.schema)
-        dirs = self._manifest(sid)["dirs"]
-        if not dirs:
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.schema(self.schema).parquet(*dirs)
+        dirs = self._manifest(sid)["dirs"] if sid >= 0 else []
+        return self._scan(dirs)
 
     def read_snapshot_delta(self, snapshot_id: int | None = None) -> DataFrame:
         """Only the rows added by a snapshot (default: current) —
         the append's data dirs minus the parent's."""
         sid = self.current_snapshot() if snapshot_id is None else snapshot_id
         if sid < 0:
-            return self.spark.createDataFrame([], self.schema)
+            return self._scan([])
         m = self._manifest(sid)
         parent_dirs = set(self._manifest(m["parent"])["dirs"]) if m["parent"] >= 0 else set()
-        new_dirs = [d for d in m["dirs"] if d not in parent_dirs]
-        if not new_dirs:
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.schema(self.schema).parquet(*new_dirs)
+        return self._scan([d for d in m["dirs"] if d not in parent_dirs])
+
+    def _scan(self, entries: list[str]) -> DataFrame:
+        if not entries:
+            return local_frame(self.spark, [], self.schema)
+        # os.path.join keeps an absolute entry as it is
+        paths = [os.path.normpath(os.path.join(self.dir, e)) for e in entries]
+        return self.spark.read.schema(self.schema).parquet(*paths)
 
     def rollback(self, snapshot_id: int) -> None:
         """Re-pin CURRENT to an earlier snapshot (resume path)."""

@@ -126,6 +126,55 @@ def test_engine_resolves_hosts_once_into_a_local_relation(spark, tmp_path):
     assert "LocalTableScan" in sel_plan
 
 
+def test_empty_snapshot_reads_plan_as_local_relations(spark, tmp_path):
+    """An empty state table reads as a driver-local empty relation
+    (tables/local.py), not a Python RDD whose every scan starts
+    defaultParallelism Python tasks: before any commit, and for a
+    snapshot that holds or adds no data dir."""
+    from news_crawler_spark import schemas
+    from news_crawler_spark.tables import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path), "resolved", schemas.RESOLVED)
+    reads = [t.read(), t.read_snapshot_delta()]
+    t.append_dir([])
+    reads += [t.read(), t.read_snapshot_delta()]
+    for df in reads:
+        plan = plan_of(df, "simple")
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.columns == schemas.RESOLVED.names
+
+
+def test_first_dedup_ingest_prunes_its_state_joins(spark, tmp_path, monkeypatch):
+    """A first DedupState.ingest joins empty state tables: the exact
+    (fingerprint) and near (LSH band) joins must see a LocalTableScan
+    on the state side, never a Python RDD scan, so the optimizer
+    prunes the joins themselves (PropagateEmptyRelation)."""
+    from news_crawler_spark.ingest import DedupState
+
+    batch = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta iota")],
+        "doc_id long, text string")
+    cls = type(batch)
+    joins = {}
+    real_join = cls.join
+
+    def recording_join(self, other, on=None, how=None):
+        out = real_join(self, other, on, how)
+        joins.setdefault(str(on), (other, out))
+        return out
+
+    monkeypatch.setattr(cls, "join", recording_join)
+    DedupState(spark, str(tmp_path / "state")).ingest(batch, "b0")
+    monkeypatch.undo()
+
+    for key in ("fp", str(["band_id", "band_hash"])):  # exact, near
+        assert key in joins, sorted(joins)
+        state_side, joined = (plan_of(df, "simple") for df in joins[key])
+        assert "LocalTableScan" in state_side, state_side
+        assert "ExistingRDD" not in state_side, state_side
+        assert "Join" not in joined, joined
+
+
 def test_sid_assignment_has_no_single_partition_exchange(spark):
     """Global SID numbering must be the two-phase form: range
     repartition + partition-local rank + offset map — never an

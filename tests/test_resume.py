@@ -75,6 +75,30 @@ def test_resume_rejects_torn_resolved_table(spark, tmp_path, dispo):
         _mk_engine(spark, state).resume()
 
 
+def test_copied_state_dir_resumes_without_the_original(spark, tmp_path):
+    """A state dir is self-contained: manifests locate data relative to
+    their table (resolved adopts ../documents/... staging dirs), so a
+    copy resumes and finishes oracle-exact after the original is gone."""
+    base = str(tmp_path / "base")
+    _two_rounds(spark, base)
+    state = str(tmp_path / "copy")
+    shutil.copytree(base, state)
+    shutil.rmtree(base)
+
+    eng = _mk_engine(spark, state)
+    assert eng.resume() == 2
+    eng.run(2)
+    oracle = CrawlOracle(CFG).run(4)
+    log = sorted((r["round"], r.host, r.seq, r.url)
+                 for r in eng.crawl_log_df().collect())
+    assert log == sorted(oracle.crawl_log)
+    assert {(r.url, r.seen_round) for r in eng.url_seen_df().collect()} \
+        == set(oracle.url_seen.items())
+    dirs = eng.resolved._manifest(eng.resolved.current_snapshot())["dirs"]
+    assert dirs and all(d.startswith(os.path.join("..", "documents", ""))
+                        for d in dirs)
+
+
 def test_resume_accepts_two_part_lineage_digest(spark, tmp_path):
     """Lineage rows written while the engine also kept a bloom shard
     digest hold "<url-seen digest>:<shard digest>"; resume checks the

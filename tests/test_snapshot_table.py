@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import json
+import os
+import threading
+
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from news_crawler_spark.tables import SnapshotTable
@@ -90,3 +96,48 @@ def test_append_rows_driver_side(spark, tmp_path):
     t2 = SnapshotTable(spark, str(tmp_path), "bad", nested)
     with _pytest.raises(TypeError):
         t2.append_rows([([1, 2],)])
+
+
+def test_observation_on_empty_read_reports_zero(spark, tmp_path):
+    """An Observation over an empty table's read (the crawl's round-0
+    and zero-work shapes) still reports its metrics: the empty local
+    relation's action completes and fills ``n = 0`` promptly."""
+    t = SnapshotTable(spark, str(tmp_path), "t", SCHEMA)
+    obs = Observation()
+    got = {}
+
+    def run():
+        t.read().observe(obs, F.count(F.lit(1)).alias("n")).count()
+        got.update(obs.get)
+
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(timeout=120)
+    assert not th.is_alive(), "Observation on an empty read did not complete"
+    assert got == {"n": 0}
+
+
+def test_manifests_hold_relative_dirs_and_read_absolute_ones(spark, tmp_path):
+    """New manifest entries are relative to the table dir; entries an
+    older writer stored as absolute paths still read, and appends on
+    top of them keep both forms working."""
+    t = SnapshotTable(spark, str(tmp_path), "t", SCHEMA)
+    t.append(_df(spark, [(1, "a")]))
+    t.append(_df(spark, [(2, "b")]))
+    assert not any(os.path.isabs(d) for d in t._manifest(1)["dirs"])
+    for sid in (0, 1):  # rewrite as absolute-path manifests
+        path = os.path.join(t.manifest_dir, f"{sid:08d}.json")
+        with open(path) as f:
+            m = json.load(f)
+        m["dirs"] = [os.path.join(t.dir, d) for d in m["dirs"]]
+        with open(path, "w") as f:
+            json.dump(m, f)
+
+    t = SnapshotTable(spark, str(tmp_path), "t", SCHEMA)
+    assert sorted(r.k for r in t.read().collect()) == [1, 2]
+    assert [r.k for r in t.read_snapshot_delta().collect()] == [2]
+    t.append(_df(spark, [(3, "c")]))
+    assert sorted(r.k for r in t.read().collect()) == [1, 2, 3]
+    assert [r.k for r in t.read_snapshot_delta().collect()] == [3]
+    assert [os.path.isabs(d) for d in t._manifest(2)["dirs"]] == \
+        [True, True, False]
