@@ -4,8 +4,8 @@ One round = one declarative DataFrame DAG::
 
     frontier scan → latest-attempt → anti-join resolved (seen ∪ dead)
       → robots + budget gate (broadcast hosts)
-      → salt-local + per-host priority top-k          (selection)
-      → (host, salt) repartition → fetch/parse UDF    (Python, one task per core)
+      → per-host priority top-k, one window          (selection)
+      → url_hash repartition → fetch/parse UDF       (Python, one task per core)
       → link extraction (native) → first-wins anti-join vs frontier
       → state appends: frontier, documents, resolved
       → lineage row                                    (commit marker)

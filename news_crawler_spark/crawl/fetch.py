@@ -4,8 +4,8 @@ Python stage.
 The reference fetches serially with requests/cloudscraper and parses
 with BeautifulSoup (``news.py:85-124``, ``asec.py:56-61``); here a
 fetch round is one ``mapInPandas`` pass over the selected candidates,
-repartitioned by ``(host, salt)`` with the selection's
-``frontier.N_SALTS`` so one hot host spreads over several partitions.
+repartitioned by ``url_hash``, a key unique per row, so each host's
+at most ``budget`` rows spread over every task.
 Politeness is not enforced here: the selection's per-host budget
 already caps what a host gets per round (crawl/frontier.py).
 
@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from news_crawler_spark import schemas
-from news_crawler_spark.crawl.frontier import N_SALTS
 from news_crawler_spark.fixtures.sitegen import EXCLUDED_HOST, SiteConfig, synth_page
 
 
@@ -135,17 +134,13 @@ def fetch_round(selected: DataFrame, fetcher: Fetcher) -> DataFrame:
     # costs 0.20-0.25 s of a core in Python worker set-up, where
     # importlib.invalidate_caches() makes 16 zipimporters re-read their
     # archives, the spark-core jar most (module docstring) — more than
-    # the (host, salt) imbalance that extra waves would pack.
+    # the task imbalance that extra waves would pack.
     # Measured with perfbench crawl_backlog at local[4] on a 4-vCPU Xeon
     # VM, medians of 10 interleaved runs: 16 fetch tasks a round and the
     # hosts table re-read each round ran 366 urls/s; 4 fetch tasks and
     # hosts read once (CrawlEngine.hosts) ran 575 urls/s.
     n_parts = selected.sparkSession.sparkContext.defaultParallelism
-    inp = (
-        selected.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(N_SALTS)))
-        .repartition(n_parts, F.col("host"), F.col("salt"))
-        .select(*passthrough)
-    )
+    inp = selected.repartition(n_parts, "url_hash").select(*passthrough)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -9,30 +9,25 @@ SURVEY.md §2:
   (D2/J1, reference ``scheduler.py:59-75``),
 * robots + politeness-budget gating at *selection* time — never by
   sleeping in UDFs (T3, reference ``news.py:134-135``; north_rule),
-* priority top-k per host with a **two-phase, salt-local pre-prune**
-  so one hot host cannot skew a single window partition
-  (L4, reference ``news.py:151-163``; SURVEY.md §4 skew row).
+* priority top-k per host (L4, reference ``news.py:151-163``): one
+  ``row_number`` window per host, which Spark plans as a Partial
+  ``WindowGroupLimit`` below the host shuffle and a Final one above
+  it, so one hot host ships at most ``max_budget`` rows per map
+  partition (SURVEY.md §4 skew row).
 
 Scale notes (10^10 frontier): the frontier is append-only. The state
-tables are plain parquet snapshot tables (tables/snapshot.py), not
-bucketed, so the slot anti-join in :func:`pending` shuffles both sides
-on ``(url_sha, attempt)`` every round, or broadcasts the smaller one;
-tables/bucketed.py has the ``url_hash``-bucketed layout that would
-co-partition it, unused by the engine. The per-host top-k never sees
-the full frontier: the salt-local phase-1 prune cuts each host to
-``budget`` rows per salt bucket before the global per-host window.
+tables are plain parquet snapshot tables (tables/snapshot.py), so the
+slot anti-join in :func:`pending` shuffles both sides on
+``(url_sha, attempt)`` every round, or broadcasts the smaller one. The
+per-host top-k never sorts the full frontier: the Partial limit cuts
+each host to ``max_budget`` rows per map partition before the one
+exchange.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# salt fan-out for the hot-host pre-prune and the fetch stage's
-# (host, salt) repartition; at cluster scale set to
-# ~(executors * cores) / n_active_hosts, floor 8
-N_SALTS = 8
-
 
 def freshness_score(priority_col, lastmod_col, ref_date: str,
                     half_life_days: float = 30.0) -> F.Column:
@@ -83,24 +78,20 @@ def select_candidates(cand: DataFrame, hosts: DataFrame) -> DataFrame:
         .filter(~F.exists("disallow", lambda d: F.col("path").startswith(d)))
     )
 
-    # phase 1: salt-local top-k — a hot host's rows split across N_SALTS
-    # partitions, each pruned to `budget` before the global window sees them
-    salted = gated.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(N_SALTS)))
-    w_local = Window.partitionBy("host", "salt").orderBy(
-        F.col("priority").desc(), F.col("url").asc()
-    )
-    pruned = (
-        salted.withColumn("_lrn", F.row_number().over(w_local))
-        .filter(F.col("_lrn") <= F.col("budget"))
-        .drop("_lrn")
-    )
-
-    # phase 2: exact per-host top-budget over ≤ budget*N_SALTS rows per host
+    # exact per-host top-budget in one window. The literal bound repeats
+    # `seq <= budget`, but only a literal lets Spark's InferWindowGroupLimit
+    # put a Partial WindowGroupLimit below the host exchange, so a hot
+    # host ships at most max_budget rows per map partition (session.py
+    # lifts windowGroupLimitThreshold to the largest legal budget).
+    # Collecting a local hosts relation's budgets runs no Spark job.
+    max_budget = max((r.budget for r in hosts.select("budget").collect()),
+                     default=0)
     w_host = Window.partitionBy("host").orderBy(
         F.col("priority").desc(), F.col("url").asc()
     )
     return (
-        pruned.withColumn("seq", F.row_number().over(w_host))
-        .filter(F.col("seq") <= F.col("budget"))
+        gated.withColumn("seq", F.row_number().over(w_host))
+        .filter((F.col("seq") <= F.col("budget"))
+                & (F.col("seq") <= F.lit(max_budget)))
         .drop("disallow")
     )

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from news_crawler_spark.config import _INT_BOUNDS
+
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -59,6 +61,12 @@ def get_spark(
                                "/dev/shm/spark-local" if os.path.isdir("/dev/shm")
                                else "/tmp"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # crawl selection's per-host top-budget window keeps its Partial
+        # WindowGroupLimit (the hot-host cap, crawl/frontier.py) only for
+        # bounds up to this threshold (default 1000): lift it to the
+        # largest legal politeness budget
+        .config("spark.sql.optimizer.windowGroupLimitThreshold",
+                str(_INT_BOUNDS["politeness_budget"][1]))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,23 +69,57 @@ def test_selection_plan_has_no_full_frontier_window(spark, tmp_path):
     assert "Broadcast" in sel_plan
 
 
+def _candidates(spark, hot_budget):
+    """A few pending rows over the fixture hosts, as selection sees
+    them; the first host's budget set to ``hot_budget``."""
+    from news_crawler_spark.fixtures import SiteConfig, host_rows
+    from news_crawler_spark.schemas import FRONTIER, HOSTS
+
+    hosts = host_rows(SiteConfig())
+    hosts[0]["budget"] = hot_budget
+    cand = [(f"http://{h['host']}/p{i}", i, f"sha{i}", h["host"], f"/p{i}",
+             0.5, 0, 0, 0) for i, h in enumerate(hosts * 3)]
+    return (spark.createDataFrame(cand, FRONTIER),
+            spark.createDataFrame(hosts, HOSTS))
+
+
+@pytest.mark.parametrize("hot_budget", [5, 1500])
+def test_selection_is_one_host_exchange_with_window_group_limits(spark, hot_budget):
+    """Per-host top-budget selection is one window: a Partial
+    WindowGroupLimit caps each host's rows per map partition below the
+    single host Exchange and a Final one completes it above (no salt
+    pre-prune). A budget above Spark's default 1000-row
+    windowGroupLimitThreshold keeps the Partial limit too (session.py)."""
+    from news_crawler_spark.crawl import frontier as fops
+
+    sel = fops.select_candidates(*_candidates(spark, hot_budget))
+    plan = plan_of(sel, "simple")
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (\S+)", plan)
+    assert len(shuffles) == 1 and shuffles[0].startswith("hashpartitioning(host#"), plan
+    assert re.search(r"WindowGroupLimit .*, Partial", plan), plan
+    assert re.search(r"WindowGroupLimit .*, Final", plan), plan
+    assert "salt" not in plan
+
+
 def test_fetch_stage_keeps_explicit_partitioning(spark):
-    """The (host, salt) repartition before the fetch UDF must carry an
-    explicit partition count (AQE must not coalesce the CPU-bound UDF
-    onto a couple of tasks — measured regression)."""
+    """The fetch UDF's input is repartitioned on url_hash (unique per
+    row, so a host's rows spread over every task) with an explicit
+    partition count: AQE must not coalesce the CPU-bound UDF onto a
+    couple of tasks (measured regression)."""
+    from news_crawler_spark.crawl import frontier as fops
     from news_crawler_spark.crawl.fetch import fetch_round, SyntheticFetcher
     from news_crawler_spark.fixtures import SiteConfig
 
-    sel = spark.createDataFrame(
-        [("http://h0000.test/p0", 1, "aa", "h0000.test", "/p0", 0.5, 0, 0, 1, 1.0)],
-        "url string, url_hash long, url_sha string, host string, path string, "
-        "priority double, discovered_round int, attempt int, seq int, crawl_delay double",
-    )
+    sel = fops.select_candidates(*_candidates(spark, 5))
     fetched = fetch_round(sel, SyntheticFetcher(SiteConfig()))
+    n = spark.sparkContext.defaultParallelism
     # REPARTITION_BY_NUM (explicit) rather than plain hashpartitioning;
     # one task per core: every extra Python task pays the worker's
     # fixed set-up cost (crawl/fetch.py)
-    assert fetched.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    plan = plan_of(fetched, "simple")
+    assert re.search(rf"Exchange hashpartitioning\(url_hash#\d+L, {n}\), "
+                     "REPARTITION_BY_NUM", plan), plan
+    assert fetched.rdd.getNumPartitions() == n
 
 
 def test_engine_resolves_hosts_once_into_a_local_relation(spark, tmp_path):

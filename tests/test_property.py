@@ -90,6 +90,49 @@ def test_first_wins_dedup_matches_python(spark, rows):
     assert got == set(ref.values())
 
 
+# --- crawl selection vs a serial per-host sort-and-take -----------------
+# (host, budget, pending rows, robots disallow): one hot host holding
+# most rows with a budget above the default WindowGroupLimit threshold,
+# budgets of 1 and 3, a host with fewer pending rows than its budget
+SELECT_HOSTS = [("hot.test", 1500, 3000, ["/private"]),
+                ("one.test", 1, 40, []),
+                ("three.test", 3, 40, ["/x"]),
+                ("few.test", 1500, 5, [])]
+
+
+@given(rng_seed=st.integers(0, 2**16))
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_select_candidates_matches_python(spark, rng_seed):
+    import random
+
+    from news_crawler_spark.crawl.frontier import select_candidates
+    from news_crawler_spark.schemas import FRONTIER, HOSTS
+
+    rng = random.Random(rng_seed)
+    hosts = [(h, 1.0, budget, disallow) for h, budget, _, disallow in SELECT_HOSTS]
+    rows = []
+    for h, _, n, _ in SELECT_HOSTS + [("unlisted.test", 0, 3, [])]:
+        for i in range(n):
+            path = rng.choice(["/p", "/private/p", "/x/p"]) + str(i)
+            url = f"http://{h}{path}"
+            # few distinct priorities: ties fall back to url order
+            rows.append((url, rng.getrandbits(63), url, h, path,
+                         rng.choice([0.1, 0.5, 0.9]), 0, 0, 0))
+    rng.shuffle(rows)
+    got = sorted((r.url, r.host, r.seq) for r in select_candidates(
+        spark.createDataFrame(rows, FRONTIER),
+        spark.createDataFrame(hosts, HOSTS)).collect())
+
+    want = []
+    for h, budget, _, disallow in SELECT_HOSTS:
+        mine = sorted((r for r in rows if r[3] == h
+                       and not any(r[4].startswith(d) for d in disallow)),
+                      key=lambda r: (-r[5], r[0]))
+        want += [(r[0], h, seq) for seq, r in enumerate(mine[:budget], 1)]
+    assert got == sorted(want)
+
+
 @given(url=st.from_regex(r"http://h000[0-3]\.test/p[0-9]{1,3}", fullmatch=True))
 @settings(max_examples=50, deadline=None)
 def test_sha_priority_twins_agree(url):

@@ -1,9 +1,6 @@
-"""Source-format readers, bucketed co-located joins, foreachBatch sink."""
+"""Source-format readers and the foreachBatch snapshot sink."""
 
 from __future__ import annotations
-
-import contextlib
-import io
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -13,7 +10,6 @@ from news_crawler_spark.sources.readers import (
     read_seeds_csv,
 )
 from news_crawler_spark.tables import SnapshotTable
-from news_crawler_spark.tables.bucketed import bucketed_join, save_bucketed
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,37 +27,6 @@ def test_read_documents_jsonl(spark, tmp_path):
                  '"source": "s", "n_chars": 11}\n')
     r = read_documents_jsonl(spark, str(p)).collect()[0]
     assert (r.doc_id, r.text, r.n_chars) == (1, "hello world", 11)
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Identically-bucketed tables join WITHOUT a shuffle on either
-    side — the layout the big state tables adopt at 10^10 scale."""
-    frontier_like = spark.range(10_000).select(
-        F.xxhash64("id").alias("url_hash"), F.col("id").alias("a"))
-    resolved_like = spark.range(5_000).select(
-        F.xxhash64("id").alias("url_hash"), F.col("id").alias("b"))
-    try:
-        save_bucketed(frontier_like, "t_frontier", n_buckets=8)
-        save_bucketed(resolved_like, "t_resolved", n_buckets=8)
-
-        joined = bucketed_join(spark, "t_frontier", "t_resolved", "url_hash")
-        # bucketed scans defeat auto-broadcast only for big tables;
-        # force the non-broadcast path to expose the bucketing property
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                joined.explain("formatted")
-            plan = buf.getvalue()
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-            assert "Exchange" not in plan, "bucketed join must not shuffle"
-            assert joined.count() == 5_000
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                           str(64 * 1024 * 1024))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_frontier")
-        spark.sql("DROP TABLE IF EXISTS t_resolved")
 
 
 def test_foreach_batch_snapshot_sink(spark, tmp_path):
