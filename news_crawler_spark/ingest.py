@@ -29,7 +29,12 @@ non-exact docs compute signatures — exact dups skip shingling
 entirely, the dominant term on dup-heavy recrawls); both verdict joins
 key on derived values (fingerprint / band hash), so state grows with
 unique content, not ingest volume, and the band join shuffles only the
-batch side against an equi-keyed table.
+batch side against an equi-keyed table. Per batch the lineage is read
+once, one collect of ``(seq, batch_id)`` that serves both the replay
+check and the commit row's ``seq``, and the commit row itself is
+written on the driver; what is left on the driver between jobs is
+DataFrame building, kept to a few py4j calls per wide expression (see
+``operators/dedup.py`` and ``session.py``).
 """
 
 from __future__ import annotations
@@ -74,6 +79,17 @@ INGEST_LINEAGE = T.StructType([
     T.StructField("n_near", T.LongType()),
     T.StructField("n_new", T.LongType()),
 ])
+
+
+def _lineage_keys(lineage: SnapshotTable) -> tuple[set[str], int]:
+    """Committed batch_ids (compaction markers included) and the next
+    lineage ``seq``, from ONE read of ``lineage`` — a single collect of
+    ``(seq, batch_id)``, at most one Spark job. An ingest takes its
+    replay check and its commit row's seq from it: state has a single
+    writer, so nothing commits between this read and that row."""
+    rows = lineage.read().select("seq", "batch_id").collect()
+    return ({r.batch_id for r in rows},
+            max((int(r.seq) for r in rows), default=-1) + 1)
 
 
 class DedupState:
@@ -129,11 +145,6 @@ class DedupState:
                 .filter(~F.col("batch_id").startswith("compact-"))
                 .orderBy("seq").collect()]
 
-    def _next_seq(self) -> int:
-        rows = (self.lineage.read()
-                .orderBy(F.col("seq").desc()).limit(1).collect())
-        return int(rows[0].seq) + 1 if rows else 0
-
     # -- maintenance ------------------------------------------------------
     def compact(self) -> dict:
         """Rewrite the derived-key state for long-lived ingest (the
@@ -170,7 +181,7 @@ class DedupState:
             .select("doc_id", "band_id", "band_hash"))
         self.fingerprints.overwrite(self.fingerprints.read())
         after = self.bands.read().count()
-        seq = self._next_seq()
+        _, seq = _lineage_keys(self.lineage)
         self.lineage.append_rows(
             [(seq, f"compact-{seq}",
               self.fingerprints.current_snapshot(),
@@ -231,9 +242,8 @@ class DedupState:
                 f"batch_id {batch_id!r} uses the reserved 'compact-' "
                 "marker namespace — it would collide with compaction "
                 "lineage rows and be silently skipped")
-        done = (self.lineage.read()
-                .filter(F.col("batch_id") == batch_id).limit(1).collect())
-        if done:
+        committed, seq = _lineage_keys(self.lineage)
+        if batch_id in committed:
             return (self.verdicts.read()
                     .filter(F.col("batch_id") == batch_id)
                     .select("doc_id", "verdict", "matched_id"))
@@ -320,10 +330,19 @@ class DedupState:
         # -- commit: data tables first, lineage row last (atomicity) --
         # the three appends hit independent tables and read only
         # checkpointed inputs (plus each table's own immutable current
-        # snapshot), so they overlap as concurrent jobs — same pattern
-        # as the crawl engine's state_appends; the lineage row below
-        # remains the single commit marker
+        # snapshot), so they overlap as concurrent jobs on a pool; the
+        # lineage row below remains the single commit marker. Each
+        # submitted call is wrapped with inheritable_thread_target so
+        # its jobs carry the caller's job group and local properties
+        # (a pool thread's JVM twin starts with none, and
+        # sc.cancelJobGroup could not reach them)
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.util import inheritable_thread_target
+
+        def run_in(pool, fn, *args):
+            return pool.submit(inheritable_thread_target(self.spark)(fn),
+                               *args)
 
         # first batch to carry a fingerprint wins; within the batch the
         # smallest doc_id is the witness (deterministic)
@@ -332,20 +351,18 @@ class DedupState:
         # breaking compact()'s one-row-per-fp invariant
         with ThreadPoolExecutor(max_workers=3) as pool:
             futs = [
-                pool.submit(self.verdicts.append, verdict_rows),
-                pool.submit(
-                    self.fingerprints.merge_insert,
+                run_in(pool, self.verdicts.append, verdict_rows),
+                run_in(
+                    pool, self.fingerprints.merge_insert,
                     batch_fp.filter(F.col("fp").isNotNull())
                     .groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
                     .select("fp", "doc_id"),
                     "fp"),
-                pool.submit(self.bands.append,
-                            new_bands.select("doc_id", "band_id",
-                                             "band_hash")),
+                run_in(pool, self.bands.append,
+                       new_bands.select("doc_id", "band_id", "band_hash")),
             ]
             for f in futs:
                 f.result()
-        seq = self._next_seq()
         # driver-side 1-row commit marker — no Spark job (see
         # SnapshotTable.append_rows)
         self.lineage.append_rows(
@@ -449,11 +466,6 @@ class ParagraphState:
                 .filter(~F.col("batch_id").startswith("compact-"))
                 .orderBy("seq").collect()]
 
-    def _next_seq(self) -> int:
-        rows = (self.lineage.read()
-                .orderBy(F.col("seq").desc()).limit(1).collect())
-        return int(rows[0].seq) + 1 if rows else 0
-
     # -- maintenance ------------------------------------------------------
     def compact(self) -> dict:
         """Small-file coalescing: merge_insert appends one data dir per
@@ -463,7 +475,7 @@ class ParagraphState:
         DedupState.compact). Atomic overwrite; always safe to re-run."""
         n = self.paragraphs.read().count()
         self.paragraphs.overwrite(self.paragraphs.read())
-        seq = self._next_seq()
+        _, seq = _lineage_keys(self.lineage)
         self.lineage.append_rows(
             [(seq, f"compact-{seq}",
               self.paragraphs.current_snapshot(),
@@ -505,9 +517,8 @@ class ParagraphState:
                 f"batch_id {batch_id!r} uses the reserved 'compact-' "
                 "marker namespace — it would collide with compaction "
                 "lineage rows and be silently skipped")
-        done = (self.lineage.read()
-                .filter(F.col("batch_id") == batch_id).limit(1).collect())
-        if done:
+        committed, seq = _lineage_keys(self.lineage)
+        if batch_id in committed:
             return (self.verdicts.read()
                     .filter(F.col("batch_id") == batch_id)
                     .select("doc_id", "n_paras", "n_new", "new_frac"))
@@ -552,7 +563,6 @@ class ParagraphState:
             flagged.filter(F.col("is_new"))
             .select("fp", "doc_id", "pos"),
             "fp")
-        seq = self._next_seq()
         self.lineage.append_rows(
             [(seq, batch_id,
               self.paragraphs.current_snapshot(),

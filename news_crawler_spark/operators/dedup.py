@@ -168,30 +168,22 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     # signature pipeline is the groupBy, which partial-aggregates to
     # num_hashes longs per doc map-side before shuffling
     sh = _shingle_rows(df, text_col, id_col, shingle_n, distinct=False)
+    # every wide expression below is ONE SQL string — one parse and one
+    # py4j call, where a Column-by-Column build pays a py4j round trip
+    # per F.* call (~100 per batch at 32 hashes)
     if hash_fn == "xxhash64":
-        hashed = sh.select(
-            id_col,
-            F.pmod(F.xxhash64("shingle"), F.lit(_MH_DOMAIN)).alias("_h1"),
-            (F.pmod(F.xxhash64(F.lit("h2"), F.col("shingle")),
-                    F.lit(_MH_DOMAIN)) + 1).alias("_h2"),
-        )
+        h1, h2 = "xxhash64(shingle)", "xxhash64('h2', shingle)"
     else:
-        digest = F.sha2(F.col("shingle"), 256)
-        hashed = sh.select(
-            id_col,
-            F.pmod(F.conv(F.substring(digest, 1, 15), 16, 10).cast("long"),
-                   F.lit(_MH_DOMAIN)).alias("_h1"),
-            (F.pmod(F.conv(F.substring(digest, 16, 15), 16, 10).cast("long"),
-                    F.lit(_MH_DOMAIN)) + 1).alias("_h2"),
-        )
-    mins = hashed.groupBy(id_col).agg(*[
-        F.min(F.col("_h1") + F.lit(j) * F.col("_h2")).alias(f"_m{j}")
-        for j in range(num_hashes)
-    ])
-    return mins.select(
+        h1, h2 = (f"cast(conv(substring(sha2(shingle, 256), {pos}, 15), 16, 10)"
+                  " as bigint)" for pos in (1, 16))
+    hashed = sh.select(
         F.col(id_col),
-        F.array(*[F.col(f"_m{j}") for j in range(num_hashes)]).alias("sig"),
+        F.expr(f"pmod({h1}, {_MH_DOMAIN})").alias("_h1"),
+        F.expr(f"pmod({h2}, {_MH_DOMAIN}) + 1").alias("_h2"),
     )
+    return hashed.groupBy(id_col).agg(F.expr(
+        "array(" + ", ".join(f"min(_h1 + {j} * _h2)"
+                             for j in range(num_hashes)) + ")").alias("sig"))
 
 
 def minhash_band_table(sigs: DataFrame, num_hashes: int = 32,
@@ -200,18 +192,14 @@ def minhash_band_table(sigs: DataFrame, num_hashes: int = 32,
     is the signature slice itself (joined as a string) —
     engine-agnostic, so the oracle can replay it; at truly huge band
     tables swap in a fixed-width hash of the same string."""
-    rows_per_band = num_hashes // bands
-    # sig arrives as a bound attribute (separate projection), so the
-    # per-band slices don't recompute the signature
+    r = num_hashes // bands
+    # sig arrives as a bound attribute (the aggregate's output), so the
+    # per-band slices don't recompute the signature; one SQL parse
+    slices = ", ".join(f"concat_ws(',', slice(sig, {b * r + 1}, {r}))"
+                       for b in range(bands))
     return sigs.select(
-        id_col,
-        F.posexplode(
-            F.array(*[
-                F.concat_ws(
-                    ",", F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band))
-                for b in range(bands)
-            ])
-        ).alias("band_id", "band_hash"),
+        F.col(id_col),
+        F.expr(f"posexplode(array({slices}))").alias("band_id", "band_hash"),
     )
 
 
@@ -323,47 +311,37 @@ def simhash_band_values(df: DataFrame, text_col: str = "text",
     tok = spread_scan(df).select(F.col(id_col), F.explode(toks).alias("_tok"))
     if hash_fn == "xxhash64":
         # production fast path: two 32-bit halves of one xxhash64
-        full = F.xxhash64("_tok")
-        mask = F.lit((1 << 32) - 1)
-        hashed = tok.select(
-            F.col(id_col),
-            full.bitwiseAND(mask).alias("_hl"),
-            F.shiftright(full, 32).bitwiseAND(mask).alias("_hh"),
-        )
+        hl = "xxhash64(_tok) & 4294967295"
+        hh = "shiftright(xxhash64(_tok), 32) & 4294967295"
     else:
-        digest = F.sha2(F.col("_tok"), 256)
-        hashed = tok.select(
-            F.col(id_col),
-            F.conv(F.substring(digest, 1, 8), 16, 10).cast("long").alias("_hl"),
-            F.conv(F.substring(digest, 9, 8), 16, 10).cast("long").alias("_hh"),
-        )
+        hl, hh = (f"cast(conv(substring(sha2(_tok, 256), {pos}, 8), 16, 10)"
+                  " as bigint)" for pos in (1, 9))
+    hashed = tok.select(F.col(id_col), F.expr(hl).alias("_hl"),
+                        F.expr(hh).alias("_hh"))
     # vote sum for bit b over n tokens is 2*popcount_b - n exactly
     # (integers), so aggregate the raw bit sums plus one count instead
     # of 64 CASE WHEN ±1 votes — the per-row aggregate update drops a
     # conditional per bit, and the band test becomes 2*s_b > n. Values
-    # are integer-identical to the ±1 formulation.
+    # are integer-identical to the ±1 formulation. The 64 sums and the
+    # band values are one SQL parse each (py4j economy: a Column-by-
+    # Column build pays a py4j round trip per F.* call)
     votes = hashed.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("_n"),
-        *[
-            F.sum(
-                F.shiftright(F.col("_hl" if b < 32 else "_hh"), b % 32)
-                .bitwiseAND(F.lit(1))
-            ).alias(f"_s{b}")
-            for b in range(SIMHASH_BITS)
-        ])
+        F.expr("array(" + ", ".join(
+            f"sum(shiftright({'_hl' if b < 32 else '_hh'}, {b % 32}) & 1)"
+            for b in range(SIMHASH_BITS)) + ")").alias("_s"))
 
-    def band_val(k: int) -> F.Column:
-        # one SQL parse per band (py4j economy); bit j set iff the
-        # bit-j vote sum is positive: 2*s > n
-        return F.expr(" + ".join(
-            f"(case when 2 * _s{k * band_bits + j} > _n "
+    def band_val(k: int) -> str:
+        # bit j set iff the bit-j vote sum is positive: 2*s > n
+        return " + ".join(
+            f"(case when 2 * _s[{k * band_bits + j}] > _n "
             f"then {1 << j} else 0 end)"
-            for j in range(band_bits)))
+            for j in range(band_bits))
 
+    bands = ", ".join(band_val(k) for k in range(n_bands))
     return votes.select(
         F.col(id_col),
-        F.posexplode(F.array(*[band_val(k) for k in range(n_bands)]))
-        .alias("band_id", "band_val"),
+        F.expr(f"posexplode(array({bands}))").alias("band_id", "band_val"),
     )
 
 

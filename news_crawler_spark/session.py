@@ -6,6 +6,16 @@ Session timezone is pinned to UTC so results are comparable with the
 DuckDB oracle (DuckDB timestamps are UTC-naive); the reference's
 Asia/Seoul semantics (SURVEY.md §1.2) are handled explicitly with
 ``from_utc_timestamp`` where they matter, never via session state.
+
+PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``, on by default) is
+switched off. It only adds the Python call-site to error messages, and
+it wraps every ``F.*`` / Column call with four extra py4j round trips
+(active session, a conf read, ``PySparkCurrentOrigin`` set and clear),
+a stack walk and a failing, uncached ``import IPython``: most of an
+ingest batch's driver time between jobs. Pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to turn it back on (see ``get_spark`` for when that takes effect).
 """
 
 from __future__ import annotations
@@ -31,6 +41,11 @@ def get_spark(
     the core count (the 200 default over-parallelizes local data and
     under-parallelizes 100 TB — at cluster scale this is set to
     ~2-3x total cores by the submitter).
+
+    Call-site capture is off (``extra_conf`` turns it back on). PySpark
+    caches that flag per process at the first wrapped Column call
+    (``_enable_debugging_cache``), so restarting a session in the same
+    process keeps the first value.
     """
     # make the package importable in executor Python workers no matter the
     # caller's cwd; on a real cluster this is `spark-submit --py-files`
@@ -61,6 +76,8 @@ def get_spark(
                                "/dev/shm/spark-local" if os.path.isdir("/dev/shm")
                                else "/tmp"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no per-Column call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # crawl selection's per-host top-budget window keeps its Partial
         # WindowGroupLimit (the hot-host cap, crawl/frontier.py) only for
         # bounds up to this threshold (default 1000): lift it to the

@@ -245,3 +245,21 @@ def test_compact_preserves_verdicts(spark, tmp_path):
     assert st3.bands.read().count() == n_post
     got4 = _got(st3.ingest(_df(spark, "b3"), "b3"))
     assert got4 == want["b3"]
+
+
+def test_ingest_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Every job an ingest submits, the pool-thread appends included,
+    carries the caller's job group, so ``sc.cancelJobGroup`` reaches
+    the whole batch."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    st = DedupState(spark, str(tmp_path / "state"))
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ingest-group", "job-group inheritance")
+    try:
+        for bid in ("b0", "b1"):
+            _got(st.ingest(_df(spark, bid), bid))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup("ingest-group")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

@@ -46,3 +46,60 @@ def test_deterministic_placement(spark):
             .collect())
 
     assert layout() == layout()
+
+
+def _jobs_run_by(spark, fn, group: str):
+    """(fn's result, ids of the Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("shape", ["repartitioned", "joined"])
+def test_probe_runs_no_job_on_a_fixed_exchange(spark, shape):
+    """A frame whose partitioning an explicit-count Exchange fixes is
+    judged off its plan: no shuffle stage runs to count partitions,
+    and the frame comes back as it is. The joined frame is the
+    ingest's shape, a left-anti join against a round-robin spread."""
+    p = spark.sparkContext.defaultParallelism
+    df = spark.range(1000).repartition(p)
+    if shape == "joined":
+        df = df.join(spark.range(0, 1000, 3), "id", "left_anti")
+    out, jobs = _jobs_run_by(spark, lambda: spread_scan(df), f"probe-{shape}")
+    assert jobs == []
+    assert out is df
+
+
+def test_probe_widens_a_narrow_fixed_exchange_without_a_job(spark):
+    p = spark.sparkContext.defaultParallelism
+    df = spark.range(1000).repartition(2)
+    out, jobs = _jobs_run_by(spark, lambda: spread_scan(df), "probe-narrow")
+    assert jobs == []
+    assert out.rdd.getNumPartitions() == p
+
+
+@pytest.mark.parametrize("shape", ["coalesced", "aggregated"])
+def test_narrow_frames_still_widen(spark, shape):
+    """A Coalesce above an Exchange, and an aggregate whose Exchange
+    AQE coalesces once it runs, are counted as before: both come out
+    at the default parallelism, placed as ``repartition(p)`` places
+    them."""
+    p = spark.sparkContext.defaultParallelism
+    if shape == "coalesced":
+        df = spark.range(1000).repartition(8).coalesce(1)
+    else:
+        df = spark.range(1000).selectExpr("id % 7 AS id").groupBy("id").count()
+    out = spread_scan(df)
+    assert out is not df
+    assert out.rdd.getNumPartitions() == p
+
+    def layout(frame):
+        return sorted(frame.select(F.spark_partition_id().alias("p"), "id")
+                      .groupBy("p").agg(F.bit_xor(F.xxhash64("id")).alias("h"))
+                      .collect())
+
+    assert layout(out) == layout(df.repartition(p))
